@@ -1229,9 +1229,10 @@ def _tomb_pointer(path: str) -> str:
 
 
 def _tomb_current_dir(path: str) -> str | None:
-    """The tombstone directory the pointer currently names (relative to
-    the index root), None when the mask is empty. Legacy indexes (pre-r9,
-    no pointer file) fall back to the fixed ``tombstones/`` directory."""
+    """The tombstone directory the ``_tombstones.json`` pointer names
+    (relative to the index root), None when the mask is empty or no fold
+    has published one yet. A fixed ``tombstones/`` directory with no
+    pointer is a layout no writer produces and raises."""
     import json
     import os
 
@@ -1239,11 +1240,11 @@ def _tomb_current_dir(path: str) -> str | None:
     if os.path.exists(ptr):
         with open(ptr) as fh:
             return json.load(fh).get("dir")
-    legacy = os.path.join(path, "tombstones")
-    if os.path.isdir(legacy) and any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(legacy) for f in fs):
-        return "tombstones"
+    if os.path.isdir(os.path.join(path, "tombstones")):
+        raise ValueError(
+            f"ann index {path}: a fixed tombstones/ directory without a "
+            "_tombstones.json pointer is not a layout this reader "
+            "accepts — rebuild the index (build_ivf_index).")
     return None
 
 
@@ -1275,7 +1276,7 @@ def _publish_tombstones(path: str, new_dir: str | None) -> None:
 
 def _read_tombstones(spark: SparkSession, path: str):
     """The index's pending (vec_id, centroid_id) tombstones, or None —
-    resolved through the atomic pointer (legacy fixed-dir fallback)."""
+    resolved through the atomic pointer."""
     import os
 
     d = _tomb_current_dir(path)

@@ -1076,11 +1076,10 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("widen", _leg_widen), ("rowtrack", _leg_rowtrack),
         ("generated", _leg_generated), ("replicate", _leg_replicate),
         ("dedup_state", _leg_dedup_state), ("convert", _leg_convert))}
-    # ADVICE r13 (medium): the pool must outlive-proof the whole main
-    # chain — if any step below raises, the finally still joins the
-    # side-leg threads instead of leaking non-daemon workers.
+    # the pool must outlive the whole main chain: if any step below
+    # raises, the finally still joins the side-leg threads instead of
+    # leaking non-daemon workers, and the original exception surfaces
     try:
-
         t = TxLogTable(root, key_cols=["indicator", "minute"],
                        stats_col="minute")
         ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -1263,22 +1262,22 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         c_pr.commit([{"protocol": {"minReaderVersion": 99,
                                    "minWriterVersion": 99}}],
                     c_pr.latest_version() + 1, op="upgrade_protocol")
-        c_pr.read(spark)
-        proto_refused = 0
-    except ProtocolError:
-        proto_refused = 1
+        try:
+            c_pr.read(spark)
+            proto_refused = 0
+        except ProtocolError:
+            proto_refused = 1
 
-    rdr = TxLogStreamReader(root, {"startingVersion": "-1",
-                                   "maxCommitsPerTrigger": "2"})
-    rdr.initialOffset()
-    head = t.latest_version()
-    cur, steps = -1, 0
-    while cur < head and steps <= head + 2:
-        cur = rdr.latestOffset()["version"]
-        steps += 1
-    want_steps = -(-(head + 1) // 2)
+        rdr = TxLogStreamReader(root, {"startingVersion": "-1",
+                                       "maxCommitsPerTrigger": "2"})
+        rdr.initialOffset()
+        head = t.latest_version()
+        cur, steps = -1, 0
+        while cur < head and steps <= head + 2:
+            cur = rdr.latestOffset()["version"]
+            steps += 1
+        want_steps = -(-(head + 1) // 2)
 
-    try:
         wd = side["widen"].result()
         rt = side["rowtrack"].result()
         gc = side["generated"].result()
@@ -1408,8 +1407,8 @@ def sink_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Critical-path scheduling (r14, guide §2.6): txlog_rowops is ~half the
     # suite's serial cost (22 s of 46 s per-leg total at sf0.1) — it must
     # START first, not 8th, or the pool's first wave delays the leg that
-    # bounds the suite's wall time. Legs ordered longest-first (measured:
-    # plans/r14/sink_leg_probe.json); dict order == submission order.
+    # bounds the suite's wall time. Legs ordered longest-first by measured
+    # per-leg time; dict order == submission order.
     pooled = {
         "txlog_rowops": lambda: _part(
             "txlog_rowops", sink_txlog_rowops(spark, sf_dir)),

@@ -20,9 +20,21 @@ ordered log of atomic commits. Real here, not mocked:
   catalog would hold); a MERGE rewrites only live files whose key range
   overlaps the updates and carries every other file over by reference.
 * **Checkpoint compaction** — every ``CHECKPOINT_EVERY`` commits the
-  resolved file set is written to `{v}.checkpoint.json`, so snapshot
-  resolution reads the latest checkpoint + newer commits, O(interval) not
-  O(history).
+  resolved file set and every piece of replayed table state is written
+  as a checkpoint, so every state walker reads the latest checkpoint +
+  newer commits, O(interval) not O(history).
+
+On-disk format. A reader accepts exactly these shapes: commit records
+``{v:020d}.json`` whose first key is ``"ts"`` (then ``version``,
+``actions``), numbered without holes from the earliest retained version;
+checkpoints — a ``{v}.checkpoint.json`` meta with ``parts_format:
+"parquet"`` that carries every key in ``CKPT_KEYS``, the add-list in
+``{v}.{i}.checkpoint.part`` parquet shards, and a ``_last_checkpoint``
+pointer; and a ``metaData`` schema action in the first commit that adds
+data files. Anything else
+(a hole mid-log, an inline-``files`` or JSON-part checkpoint, a
+checkpoint missing a key, data files with no recorded schema, a record
+without a leading ``ts``) raises ``LogFormatError`` naming the shape.
 
 At 100 TB the substitutions are mechanical: the log lives on object
 storage behind a conditional-put commit service, checkpoints are parquet,
@@ -43,23 +55,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHECKPOINT_EVERY = 10
-# r10 (VERDICT #2): checkpoints are SHARDED. r9 wrote the FULL resolved
-# add-list — per-file typed stats included — into one {v}.checkpoint.json
-# and every _resolve/_seed JSON-parsed it whole on the driver. At 100 TB /
-# 10^5–10^6 live files that is a 10^2–10^3 MB JSON written per checkpoint
-# interval and parsed per table open — the r7 footer storm one layer up.
-# Now the add-action payload lives in bounded {v}.{i}.checkpoint.part
-# files (at most this many actions each; JSON arrays), the small
-# {v}.checkpoint.json META carries everything else (txns, constraints,
-# schema, protocol, mapping, config) plus the part count, and a
-# _last_checkpoint pointer skips the directory listing (Delta's
-# multi-part checkpoint + _last_checkpoint, JSON parts instead of
-# parquet because the payload is already line-sized dicts). Metadata
-# walkers (_txn_map/constraints/schema/_replay_last) therefore never
-# touch the O(live files) payload at all, and snapshot resolution is
-# cached per version (a version's file set is immutable), so repeated
-# reads parse the parts once.
+# add actions per parquet checkpoint shard (the O(live files) payload);
+# the small checkpoint META carries everything else, so metadata walkers
+# never touch the shards
 CHECKPOINT_PART_ACTIONS = 25_000
+# every checkpoint META carries every one of these keys (_write_checkpoint)
+CKPT_KEYS = ("files_parts", "n_files", "txns", "constraints", "generated",
+             "schema", "schema_evolved", "protocol", "columnMapping",
+             "config", "rowTracking")
 # bounded per-handle cache of resolved snapshots (version -> add list)
 SNAP_CACHE_MAX = 8
 CKPT_CACHE_MAX = 4          # r12: parsed checkpoint payloads per handle
@@ -182,6 +185,14 @@ class VersionExpiredError(ValueError):
     of a misleading corrupt-log message."""
 
 
+class LogFormatError(ValueError):
+    """The log holds a shape no writer of this format produces (see the
+    module's On-disk format paragraph): a hole mid-log, a checkpoint that
+    is not parquet parts carrying every key, a commit record without a
+    leading ``ts``, or data files with no recorded schema. Raised with the
+    shape named instead of guessing at what an older writer meant."""
+
+
 class ConstraintViolation(Exception):
     """A write would land rows that fail an active CHECK constraint."""
 
@@ -216,8 +227,8 @@ class SchemaEvolutionError(ValueError):
     may OMIT recorded columns (they read as NULL — Delta with
     autoMerge); changing a recorded column's TYPE (widening or
     narrowing) raises this error listing the offending fields, through
-    both the table API (at write) and the data source (reading a legacy
-    log whose footers conflict). Renames and drops are not expressible:
+    both the table API (at write) and the log replay (a recorded type
+    conflict). Renames and drops are not expressible:
     a rename degrades to omit-old + add-new, which reads as NULLs for
     old rows — rewrite the table (overwrite) to truly change a column."""
 
@@ -694,7 +705,9 @@ class TxLogTable:
                 f"(earliest available: {e}); it was expired by "
                 "vacuum(log_retain_versions=...). Read/stream/diff from "
                 f"version {e} or later.")
-        raise ValueError(f"txlog: missing version {v} (corrupt log)")
+        raise LogFormatError(
+            f"txlog: missing version {v} (corrupt log: a hole mid-log — "
+            f"versions {e}..{self.latest_version()} must all be present)")
 
     def _commit_path(self, v: int) -> str:
         return os.path.join(self.log_dir, f"{v:020d}.json")
@@ -960,36 +973,47 @@ class TxLogTable:
 
     def _latest_checkpoint(self, version: int) -> dict | None:
         """Parsed latest checkpoint META at or below `version`, or None —
-        shared by file resolution, the txn map, and checkpoint writing.
-        r10: tries the `_last_checkpoint` pointer first (Delta's), so the
-        common read-latest path skips the directory listing entirely."""
-        ptr = os.path.join(self.log_dir, "_last_checkpoint")
-        if os.path.exists(ptr):
-            try:
-                with open(ptr) as fh:
-                    pv = int(json.load(fh)["version"])
-                p = os.path.join(self.log_dir,
-                                 f"{pv:020d}.checkpoint.json")
-                if pv <= version and os.path.exists(p):
-                    with open(p) as fh:
-                        return json.load(fh)
-            except (ValueError, KeyError, json.JSONDecodeError):
-                pass          # stale/corrupt pointer -> listing fallback
-        for ckpt in self._checkpoints_desc(version):
-            return ckpt
-        return None
+        the seed of every checkpointed replay (_walk) and of checkpoint
+        writing. Tries the `_last_checkpoint` pointer first (Delta's), so
+        the common read-latest path skips the directory listing."""
+        try:
+            with open(os.path.join(self.log_dir, "_last_checkpoint")) as fh:
+                pv = int(json.load(fh)["version"])
+        except (OSError, ValueError, KeyError, json.JSONDecodeError):
+            pv = None       # absent/stale/corrupt pointer -> listing
+        if pv is not None and pv <= version \
+                and os.path.exists(self._ckpt_path(pv)):
+            return self._load_checkpoint(pv)
+        cv = max(self._ckpt_versions(version), default=None)
+        return None if cv is None else self._load_checkpoint(cv)
 
-    def _checkpoints_desc(self, version: int):
-        """Parsed checkpoint METAS at or below ``version``, newest first.
-        r10: metas are small (no add-list payload) — walkers that only
-        need txns/constraints/schema/protocol never touch the O(live
-        files) part files."""
-        for cv in sorted((int(f[:20]) for f in os.listdir(self.log_dir)
-                          if f.endswith(".checkpoint.json")
-                          and int(f[:20]) <= version), reverse=True):
-            with open(os.path.join(
-                    self.log_dir, f"{cv:020d}.checkpoint.json")) as fh:
-                yield json.load(fh)
+    def _ckpt_versions(self, version: int) -> list[int]:
+        """Versions of the checkpoint METAS at or below ``version``."""
+        return [int(f[:20]) for f in os.listdir(self.log_dir)
+                if f.endswith(".checkpoint.json") and int(f[:20]) <= version]
+
+    def _ckpt_path(self, version: int) -> str:
+        return os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
+
+    def _load_checkpoint(self, version: int) -> dict:
+        """Parse checkpoint META ``version`` and hold it to the one
+        checkpoint format: parquet parts and every key in CKPT_KEYS.
+        Anything else is a shape no writer produces — LogFormatError."""
+        with open(self._ckpt_path(version)) as fh:
+            ckpt = json.load(fh)
+        if "files" in ckpt:
+            shape = "an inline 'files' add-list (no parquet parts)"
+        elif ckpt.get("parts_format") != "parquet":
+            shape = "JSON checkpoint parts (parts_format is not 'parquet')"
+        else:
+            missing = [k for k in CKPT_KEYS if k not in ckpt]
+            if not missing:
+                return ckpt
+            shape = f"missing key(s) {missing}"
+        raise LogFormatError(
+            f"txlog: checkpoint {version} is malformed: {shape}. Every "
+            "checkpoint is parquet parts plus a meta carrying "
+            f"{list(CKPT_KEYS)}.")
 
     def _part_path(self, version: int, i: int) -> str:
         # .part (NOT .json): latest_version/earliest_version glob commit
@@ -1101,13 +1125,8 @@ class TxLogTable:
     def _ckpt_files(self, ckpt: dict,
                     columns: tuple | None = None,
                     use_cache: bool = True) -> list[dict]:
-        """The add-action payload of a checkpoint: inline ``files`` for
-        legacy single-JSON checkpoints (still readable, r10), JSON
-        .checkpoint.part shards (r10, still readable), or parquet shards
-        (r11 — ``parts_format`` marks them; same .checkpoint.part path
-        scheme so retention/vacuum handling is format-blind). ``columns``
-        requests a column-selective read (parquet shards only — legacy
-        formats are whole-payload by construction and ignore it).
+        """The add-action payload of a checkpoint (its parquet shards);
+        ``columns`` requests a column-selective read.
 
         r12 (VERDICT #1): the parsed payload is CACHED per (checkpoint
         version, columns) — part files are immutable once written, so
@@ -1117,8 +1136,6 @@ class TxLogTable:
         ``use_cache=False`` (the use_checkpoint=False validators) reads
         the disk unconditionally and populates nothing — a validator
         must trust no cache."""
-        if ckpt.get("files") is not None:
-            return ckpt["files"]
         ck = (ckpt["version"],
               None if columns is None else tuple(sorted(set(columns))))
         if use_cache:
@@ -1127,123 +1144,84 @@ class TxLogTable:
                 return self._ckpt_cache[full]
             if ck in self._ckpt_cache:
                 return self._ckpt_cache[ck]
-        if ckpt.get("parts_format") == "parquet":
-            out = self._ckpt_files_parquet(ckpt, columns)
-        else:
-            out = []
-            for i in range(int(ckpt["files_parts"])):
-                with open(self._part_path(ckpt["version"], i)) as fh:
-                    out.extend(json.load(fh))
+        out = self._ckpt_files_parquet(ckpt, columns)
         if use_cache:
             if len(self._ckpt_cache) >= CKPT_CACHE_MAX:
                 self._ckpt_cache.pop(next(iter(self._ckpt_cache)))
             self._ckpt_cache[ck] = out
         return out
 
-    @staticmethod
-    def _ckpt_carries(ckpt: dict, key: str) -> bool:
-        """Does this checkpoint carry ``key``? The files payload counts
-        as carried whether inline (legacy) or sharded (r10)."""
-        if key == "files":
-            return "files" in ckpt or "files_parts" in ckpt
-        return key in ckpt
-
-    def _seed(self, version: int, key: str) -> tuple:
-        """(checkpoint carrying ``key``, replay start): the NEWEST
-        checkpoint at or below ``version`` that carries the key — a
-        checkpoint written before the key existed falls back to OLDER
-        ones instead of forcing a full walk from 0 (r9: after log
-        retention that walk would silently skip expired commits and
-        reconstruct WRONG state — lost constraints, a wrong schema; the
-        retention boundary checkpoint always carries every key, so the
-        search bottoms out there on any vacuumed log). (None, 0) when no
-        checkpoint carries the key — the legacy full walk, which now
-        raises on expired commits instead of dropping their actions."""
-        for ckpt in self._checkpoints_desc(version):
-            if self._ckpt_carries(ckpt, key):
-                return ckpt, ckpt["version"] + 1
-        return None, 0
-
-    def _replay_base(self, version: int, key: str | None = None) -> tuple:
+    def _replay_base(self, version: int) -> dict | None:
         """Full-replay seed for ``use_checkpoint=False`` walkers (r10,
-        VERDICT #1a). Returns ``(checkpoint_or_None, start_version)``.
+        VERDICT #1a): the checkpoint to seed from, or None for a replay
+        from version 0.
 
         ``use_checkpoint=False`` exists to VALIDATE checkpoints: replay
         the raw commit log and compare. While the whole log is retained
-        that means replay-from-0 → (None, 0). Once
+        that means replay-from-0 → None. Once
         vacuum(log_retain_versions=...) expired head commits, a from-0
-        replay is impossible by construction — the r9 behavior raised
-        VersionExpiredError, making the validation silently unusable on
-        any vacuumed table (and the randomized concurrency property
-        red). The strongest full-replay check that CAN exist after
-        retention is: seed from the OLDEST checkpoint whose replay tail
-        lies entirely inside the retained log (the retention boundary
-        checkpoint vacuum wrote for exactly this purpose), then replay
-        every surviving commit on top. That still independently
-        validates every NEWER checkpoint — only the boundary itself is
-        trusted, and it is the one artifact retention cannot avoid
-        trusting.
-
-        ``key`` (constraints/txns/schema walkers): the seed must carry
-        the key; boundary checkpoints carry every key by construction
-        (_write_checkpoint), so this only skips legacy pre-key
-        checkpoints. Raises VersionExpiredError when no covering seed
-        exists (a hand-pruned log)."""
+        replay is impossible by construction. The strongest full-replay
+        check that CAN exist after retention is: seed from the OLDEST
+        checkpoint whose replay tail lies entirely inside the retained
+        log (the retention boundary checkpoint vacuum wrote for exactly
+        this purpose), then replay every surviving commit on top. That
+        still independently validates every NEWER checkpoint — only the
+        boundary itself is trusted, and it is the one artifact retention
+        cannot avoid trusting. Raises VersionExpiredError when no
+        covering seed exists (a hand-pruned log)."""
         e = self.earliest_version()
         if e <= 0:
-            return None, 0
-        best = None
-        for ckpt in self._checkpoints_desc(version):
-            if ckpt["version"] + 1 < e:
-                break           # older ones cover even less — stop
-            if key is None or self._ckpt_carries(ckpt, key):
-                best = ckpt     # keep scanning: want the OLDEST covering
-        if best is None:
+            return None
+        covering = [cv for cv in self._ckpt_versions(version) if cv + 1 >= e]
+        if not covering:
             raise VersionExpiredError(
                 f"txlog: full replay of version {version} is impossible "
                 f"— commits before {e} were expired by "
                 "vacuum(log_retain_versions=...) and no retained "
-                "checkpoint covers the expired range "
-                f"{'for key ' + key if key else ''}.")
-        return best, best["version"] + 1
+                "checkpoint covers the expired range.")
+        return self._load_checkpoint(min(covering))
 
-    def _walk_missing(self, v: int) -> None:
-        """A replay walk hit a missing commit file: expired commits make
-        the reconstruction WRONG, not merely incomplete — raise the
-        pinned error; a genuinely absent mid-log file stays tolerated
-        (legacy leniency for hand-pruned test logs)."""
-        if v < self.earliest_version():
-            self._raise_missing(v)
+    def _walk(self, version: int | None, seed, step,
+              use_checkpoint: bool = True):
+        """THE log replay every state walker runs: ``seed(ckpt)`` builds
+        the state from the newest checkpoint at or below ``version``
+        (default latest; ckpt is None when there is none), then
+        ``step(state, record)`` folds each newer commit record in
+        version order. A missing commit raises (_raise_missing: expired
+        vs a hole mid-log).
+        ``use_checkpoint=False`` is the validation replay: seeded by
+        _replay_base and reading every commit from disk, no memo."""
+        if version is None:
+            version = self.latest_version()
+        ckpt = (self._latest_checkpoint(version) if use_checkpoint
+                else self._replay_base(version))
+        state = seed(ckpt)
+        start = 0 if ckpt is None else ckpt["version"] + 1
+        for v in range(start, version + 1):
+            rec = self._commit_record(v, use_memo=use_checkpoint)
+            if rec is None:
+                self._raise_missing(v, requested=version)
+            state = step(state, rec)
+        return state
 
     def _txn_map(self, version: int | None = None,
                  use_checkpoint: bool = True) -> dict:
         """writer -> highest committed batch id at `version` (default
-        latest). Resolution mirrors _resolve: latest checkpoint's txns map
-        + newer commits, O(checkpoint interval) not O(history) — the same
-        shape Delta's checkpoints use for txn actions. Checkpoints written
-        before this map existed fall back to a full-log walk."""
-        if version is None:
-            version = self.latest_version()
-        start = 0
-        txns: dict[str, int] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "txns")
-            if ckpt is not None and ckpt["txns"] is not None:
-                txns = {w: int(b) for w, b in ckpt["txns"].items()}
-        else:
-            ckpt, start = self._replay_base(version, "txns")
-            if ckpt is not None and ckpt["txns"] is not None:
-                txns = {w: int(b) for w, b in ckpt["txns"].items()}
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        latest): the checkpoint's txns map + newer commits' txn markers,
+        O(checkpoint interval) not O(history) — the same shape Delta's
+        checkpoints use for txn actions."""
+        def step(txns, rec):
             txn = rec.get("txn")
             if txn:
                 w = txn["writer"]
                 txns[w] = max(txns.get(w, -1), int(txn["batch"]))
-        return txns
+            return txns
+
+        def seed(ckpt):
+            return {} if ckpt is None else {
+                w: int(b) for w, b in ckpt["txns"].items()}
+
+        return self._walk(version, seed, step, use_checkpoint)
 
     def last_txn_batch(self, writer: str) -> int:
         """Highest batch id committed by `writer`; -1 if none."""
@@ -1286,9 +1264,8 @@ class TxLogTable:
         """Checkpoints seed from the PREVIOUS checkpoint (correct by
         induction — each one was itself prior checkpoint + interval), so
         writing one costs O(checkpoint interval), not a full-log replay
-        in the committer's critical path. A pre-txn-map checkpoint in
-        the chain degrades the txn side to a full walk once; the next
-        checkpoint restores the bound."""
+        in the committer's critical path. The meta carries every key in
+        CKPT_KEYS — the one checkpoint format readers accept."""
         files = self._resolve(version)
         txns = self._txn_map(version)
         cons = self.constraints(version)
@@ -1303,9 +1280,9 @@ class TxLogTable:
             or [[]]
         for i, part in enumerate(parts):
             # r11 (VERDICT #2): shards are PARQUET — columnar, typed,
-            # column-selective on read (legacy JSON shards still read)
+            # column-selective on read
             self._write_ckpt_part(self._part_path(version, i), part)
-        ckpt = os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
+        ckpt = self._ckpt_path(version)
         tmp = ckpt + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
             json.dump({"version": version, "parts_format": "parquet",
@@ -1342,69 +1319,46 @@ class TxLogTable:
                     use_checkpoint: bool = True) -> dict:
         """Active CHECK constraints {name: sql_expr} at `version` —
         constraint add/drop actions ride commits (Delta records them in
-        table metadata), replayed like the txn map: latest checkpoint's
-        constraints + newer commits; pre-constraint checkpoints fall back
-        to a full walk once."""
-        if version is None:
-            version = self.latest_version()
-        start = 0
-        cons: dict[str, str] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "constraints")
-            if ckpt is not None and ckpt["constraints"] is not None:
-                cons = dict(ckpt["constraints"])
-        else:
-            ckpt, start = self._replay_base(version, "constraints")
-            if ckpt is not None and ckpt["constraints"] is not None:
-                cons = dict(ckpt["constraints"])
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        table metadata): the checkpoint's constraints + newer commits."""
+        def step(cons, rec):
             for a in rec["actions"]:
                 if "constraint" in a:
-                    cons[a["constraint"]["name"]] = \
-                        a["constraint"]["expr"]
+                    cons[a["constraint"]["name"]] = a["constraint"]["expr"]
                 elif "drop_constraint" in a:
                     cons.pop(a["drop_constraint"], None)
-        return cons
+            return cons
+
+        return self._walk(
+            version,
+            lambda c: {} if c is None else dict(c["constraints"]),
+            step, use_checkpoint)
 
     # ---- generic last-wins action replay (r9) ----------------------------
 
     def _replay_last(self, key: str, version: int | None = None,
                      default=None, use_checkpoint: bool = True):
         """Last-wins replay of a single-action kind (``protocol``,
-        ``config``, full-state ``columnMapping``): seed from the latest
-        checkpoint's carried value, fold newer commits — O(checkpoint
-        interval), the same shape as constraints(). ``columnMappingAdd``
-        DELTAS (a concurrent writer's new-column registration) fold into
-        the running mapping state append-if-absent, so racing additive
+        ``config``, ``rowTracking``, full-state ``columnMapping``): the
+        checkpoint's carried value (``default`` when it or the log never
+        recorded one), then newer commits. ``columnMappingAdd`` DELTAS (a
+        concurrent writer's new-column registration) fold into the
+        running mapping state append-if-absent, so racing additive
         writers land both columns regardless of commit order."""
-        if version is None:
-            version = self.latest_version()
-        start = 0
-        val = default
-        if use_checkpoint:
-            ckpt, start = self._seed(version, key)
-            if ckpt is not None and ckpt[key] is not None:
-                val = ckpt[key]
-        else:
-            ckpt, start = self._replay_base(version, key)
-            if ckpt is not None and ckpt[key] is not None:
-                val = ckpt[key]
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        def seed(ckpt):
+            if ckpt is None or ckpt[key] is None:
+                return default
+            return ckpt[key]
+
+        def step(val, rec):
             for a in rec["actions"]:
                 if key in a:
                     val = a[key]
                 elif key == "columnMapping" and "columnMappingAdd" \
                         in a and val is not None:
                     val = _mapping_fold_add(val, a["columnMappingAdd"])
-        return val
+            return val
+
+        return self._walk(version, seed, step, use_checkpoint)
 
     def table_protocol(self, version: int | None = None) -> dict:
         """minReaderVersion/minWriterVersion at ``version`` — default
@@ -1520,57 +1474,41 @@ class TxLogTable:
         derives its schema in O(checkpoint interval) log reads instead
         of an O(n_files) driver-side footer storm at analysis time.
 
-        Replay mirrors constraints(): seed from the latest checkpoint's
-        carried schema, fold newer commits' metaData actions — the
-        running schema is the UNION of all recorded field sets (fields
-        never leave; a racing pair of additive writers lands both
-        columns regardless of commit order), with last-wins per field.
-        ``evolved`` flips when any action's field set differs from the
-        union so far — the data source uses it for the pinned
-        read-without-mergeSchema error. Returns (None, False) for a
-        legacy log with no metaData action (readers fall back to footer
-        unification). A recorded TYPE conflict raises
+        Replay: the checkpoint's carried schema, then newer commits'
+        metaData actions — the running schema is the UNION of all
+        recorded field sets (fields never leave; a racing pair of
+        additive writers lands both columns regardless of commit order),
+        with last-wins per field. ``evolved`` flips when any action's
+        field set differs from the union so far — the data source uses
+        it for the pinned read-without-mergeSchema error. (None, False)
+        while no data file was ever added (e.g. a table with no
+        commits); data files with no recorded schema raise
+        LogFormatError. A recorded TYPE conflict raises
         SchemaEvolutionError (writes enforce it, so this only fires on
         hand-edited logs)."""
         from pyspark.sql.types import StructType
 
-        if version is None:
-            version = self.latest_version()
-        start = 0
-        fields: dict = {}                 # insertion-ordered field union
-        evolved = False
-        seen = False
-        if use_checkpoint:
-            # a pre-schema checkpoint falls back to an OLDER checkpoint
-            # carrying the key (r9, _seed — after log retention the old
-            # full-walk-from-0 would silently skip expired commits and
-            # reconstruct a WRONG schema), else a full walk that raises
-            # on expired commits
-            ckpt, start = self._seed(version, "schema")
-            if ckpt is not None and ckpt["schema"] is not None:
-                st = StructType.fromJson(json.loads(ckpt["schema"]))
-                fields = {f.name: f for f in st.fields}
-                evolved = bool(ckpt.get("schema_evolved"))
-                seen = True
-        else:
-            ckpt, start = self._replay_base(version, "schema")
-            if ckpt is not None and ckpt["schema"] is not None:
-                st = StructType.fromJson(json.loads(ckpt["schema"]))
-                fields = {f.name: f for f in st.fields}
-                evolved = bool(ckpt.get("schema_evolved"))
-                seen = True
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
-            actions = rec["actions"]
-            for a in actions:
+        def seed(ckpt):
+            st = {"fields": {}, "evolved": False, "seen": False,
+                  "data": False}
+            if ckpt is not None:
+                st["data"] = bool(ckpt["n_files"])
+                if ckpt["schema"] is not None:
+                    sch = StructType.fromJson(json.loads(ckpt["schema"]))
+                    st.update(fields={f.name: f for f in sch.fields},
+                              evolved=bool(ckpt["schema_evolved"]),
+                              seen=True)
+            return st
+
+        def step(st, rec):
+            for a in rec["actions"]:
+                if "add" in a:
+                    st["data"] = True
                 md = a.get("metaData")
                 if not md:
                     continue
-                st = StructType.fromJson(json.loads(md["schemaString"]))
-                new = {f.name: f for f in st.fields}
+                new = {f.name: f for f in StructType.fromJson(
+                    json.loads(md["schemaString"])).fields}
                 if md.get("reset"):
                     # r9 (ADVICE): overwrite/restore REPLACE the recorded
                     # schema (Delta overwriteSchema parity) — dropped
@@ -1580,10 +1518,10 @@ class TxLogTable:
                     # schema by construction (evolved=False); a RESTORE
                     # carries the target version's own evolved flag —
                     # its snapshot may mix per-file schemas.
-                    fields = dict(new)
-                    evolved = bool(md.get("evolved"))
-                    seen = True
+                    st.update(fields=dict(new),
+                              evolved=bool(md.get("evolved")), seen=True)
                     continue
+                fields = st["fields"]
                 widened = md.get("widen") or {}
                 bad = [n for n, f in new.items()
                        if n in fields
@@ -1597,17 +1535,25 @@ class TxLogTable:
                 if bad:
                     raise SchemaEvolutionError(
                         f"txlog schema: incompatible type change for "
-                        f"column(s) {bad} recorded at version {v}. "
-                        "Non-additive schema evolution (rename/drop/"
-                        "type change) is unsupported — rewrite the "
-                        "table with one schema (overwrite).")
-                if seen and set(new) != set(fields):
-                    evolved = True
+                        f"column(s) {bad} recorded at version "
+                        f"{rec['version']}. Non-additive schema evolution "
+                        "(rename/drop/type change) is unsupported — "
+                        "rewrite the table with one schema (overwrite).")
+                if st["seen"] and set(new) != set(fields):
+                    st["evolved"] = True
                 fields.update(new)
-                seen = True
-        if not seen:
+                st["seen"] = True
+            return st
+
+        st = self._walk(version, seed, step, use_checkpoint)
+        if not st["seen"]:
+            if st["data"]:
+                raise LogFormatError(
+                    "txlog: the log adds data files but records no "
+                    "metaData schema action — every writer records the "
+                    "schema in the commit that first adds data.")
             return None, False
-        return StructType(list(fields.values())), evolved
+        return StructType(list(st["fields"].values())), st["evolved"]
 
     def _schema_action(self, df: DataFrame):
         """The metaData action a write must carry, or None when the
@@ -1861,20 +1807,7 @@ class TxLogTable:
         ``version`` — generatedCol/drop_generated actions ride commits
         and checkpoints exactly like CHECK constraints (per-name deltas,
         so racing adds of DIFFERENT columns both land)."""
-        if version is None:
-            version = self.latest_version()
-        gens: dict[str, dict] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "generated")
-        else:
-            ckpt, start = self._replay_base(version, "generated")
-        if ckpt is not None and ckpt.get("generated") is not None:
-            gens = dict(ckpt["generated"])
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        def step(gens, rec):
             for a in rec["actions"]:
                 if "generatedCol" in a:
                     g = a["generatedCol"]
@@ -1882,7 +1815,12 @@ class TxLogTable:
                                        "expr": g["expr"]}
                 elif "drop_generated" in a:
                     gens.pop(a["drop_generated"], None)
-        return gens
+            return gens
+
+        return self._walk(
+            version,
+            lambda c: {} if c is None else dict(c["generated"]),
+            step, use_checkpoint)
 
     def add_generated_column(self, name: str, dtype: str,
                              expr: str) -> int:
@@ -2173,31 +2111,22 @@ class TxLogTable:
                 return self._snap_cache[version]
             if key in self._snap_cache:
                 return self._snap_cache[key]
-        start = 0
-        live: dict[str, dict] = {}
-        if use_checkpoint:
-            ckpt = self._latest_checkpoint(version)
-            if ckpt is not None:
-                live = {a["path"]: a
-                        for a in self._ckpt_files(ckpt, columns)}
-                start = ckpt["version"] + 1
-        else:
-            # r10 (VERDICT #1a): post-retention full replay seeds from
-            # the oldest covering boundary checkpoint — see _replay_base
-            ckpt, start = self._replay_base(version, "files")
-            if ckpt is not None:
-                live = {a["path"]: a
-                        for a in self._ckpt_files(ckpt, columns,
-                                                  use_cache=False)}
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._raise_missing(v, requested=version)
+
+        def seed(ckpt):
+            if ckpt is None:
+                return {}
+            return {a["path"]: a for a in self._ckpt_files(
+                ckpt, columns, use_cache=use_checkpoint)}
+
+        def step(live, rec):
             for a in rec["actions"]:
                 if "add" in a:
                     live[a["add"]["path"]] = a["add"]
                 elif "remove" in a:
                     live.pop(a["remove"], None)
+            return live
+
+        live = self._walk(version, seed, step, use_checkpoint)
         out = sorted(live.values(), key=lambda a: a["path"])
         if use_checkpoint:
             if len(self._snap_cache) >= SNAP_CACHE_MAX:
@@ -2875,40 +2804,32 @@ class TxLogTable:
 
     def _commit_ts(self, v: int) -> float | None:
         """Commit timestamp of version ``v`` via an O(1) header read —
-        r10 commits serialize "ts" as the FIRST record key, so 96 bytes
-        suffice; legacy records (ts elsewhere, or absent) fall back to
-        one full parse. None when the file is missing or carries no
-        timestamp."""
-        p = self._commit_path(v)
+        every commit record serializes "ts" as its FIRST key, so 96 bytes
+        suffice. None when the file is missing; a record without a
+        leading "ts" raises LogFormatError."""
         try:
-            with open(p) as fh:
+            with open(self._commit_path(v)) as fh:
                 head = fh.read(96)
         except OSError:
             return None
         m = re.match(r'\{"ts": ([0-9][0-9.eE+-]*)', head)
-        if m:
-            return float(m.group(1))
-        try:
-            with open(p) as fh:
-                return json.load(fh).get("ts")
-        except (OSError, json.JSONDecodeError):
-            return None
+        if m is None:
+            raise LogFormatError(
+                f"txlog: commit {v} does not start with a \"ts\" key — "
+                "every commit record serializes its timestamp first.")
+        return float(m.group(1))
 
     def version_at_timestamp(self, ts: float) -> int:
         """Latest version whose commit timestamp is <= ts — Delta's
-        TIMESTAMP AS OF resolution. Commits written before timestamps
-        existed (pre-r7 logs) are treated as arbitrarily old (always
-        eligible). Raises if the table's first commit is newer than ts.
+        TIMESTAMP AS OF resolution. Raises if the table's first commit is
+        newer than ts.
 
         r10 (VERDICT #7): O(log n) — commit timestamps are
         write-enforced monotonic (each commit records max(wall clock,
         predecessor's ts + 1µs); the O_EXCL claim serializes on the
         predecessor being fully published), so this binary-searches the
         retained version range, and every probe is a 96-byte header
-        read (_commit_ts), never an O(actions) record parse. The r9
-        behavior opened EVERY retained commit JSON per call. Legacy
-        pre-r10 logs (best-effort wall clocks) can misresolve only
-        inside a commit-race window of milliseconds."""
+        read (_commit_ts), never an O(actions) record parse."""
         lo, hi = self.earliest_version(), self.latest_version()
         best = -1
         while lo <= hi:
@@ -3677,13 +3598,10 @@ class TxLogTable:
                     "stay resolvable from the log.")
             expire_before = max(0, latest - log_retain_versions + 1)
             if expire_before > 0:
-                ckpts = sorted(
-                    int(f[:20]) for f in os.listdir(self.log_dir)
-                    if f.endswith(".checkpoint.json")
-                    and int(f[:20]) <= expire_before)
                 cb = expire_before
                 if not dry_run \
-                        and not (ckpts and ckpts[-1] == expire_before):
+                        and expire_before not in self._ckpt_versions(
+                            expire_before):
                     # ensure a checkpoint AT the boundary so the cut is
                     # exact and every retained version still resolves
                     # in O(interval) after the expired commits vanish

@@ -1,8 +1,8 @@
 """Parquet checkpoint parts (r11, VERDICT #2): the add-list payload is
 columnar — typed scalar columns, stats/bloom as their own skippable JSON
-columns — read column-selectively by planning-only walkers (vacuum),
-while legacy JSON parts and legacy inline-``files`` checkpoints stay
-readable. Counted-column proof at a planted large checkpoint."""
+columns — read column-selectively by planning-only walkers (vacuum);
+JSON-part and inline-``files`` checkpoints raise LogFormatError.
+Counted-column proof at a planted large checkpoint."""
 
 from __future__ import annotations
 
@@ -18,7 +18,8 @@ import pytest
 pytestmark = __import__('pytest').mark.slow
 from pyspark.sql import functions as F
 
-from service_level_reporting_spark.sources.txlog import TxLogTable
+from service_level_reporting_spark.sources.txlog import (
+    LogFormatError, TxLogTable)
 
 
 @pytest.fixture()
@@ -59,14 +60,18 @@ def test_parquet_parts_roundtrip_and_dv_stats_survive(spark, table_path):
     assert t2._resolve(20) == t2._resolve(20, use_checkpoint=False)
 
 
-def test_legacy_json_parts_still_read(spark, table_path):
-    """A checkpoint written by the r10 code (JSON shards, no
-    parts_format) must read identically — rewrite the current parquet
-    checkpoint in the legacy format and compare resolves."""
+def test_legacy_checkpoint_formats_raise(spark, table_path):
+    """The parquet checkpoint resolves exactly like the raw replay; a
+    checkpoint in the r10 shape (JSON shards, no parts_format) or the
+    pre-r10 shape (inline ``files``) is a format no writer produces and
+    raises LogFormatError naming the shape."""
     t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
     for v in range(12):
         t.append(_frame(spark, v))
     files = t._resolve(10, use_checkpoint=False)
+    t1 = TxLogTable.open(table_path)
+    assert t1._resolve(10) == files
+    assert len(t1._resolve()) == 12
     cp = os.path.join(t.log_dir, "00000000000000000010.checkpoint.json")
     meta = json.load(open(cp))
     # rewrite shards as r10 JSON, strip the format marker
@@ -79,9 +84,8 @@ def test_legacy_json_parts_still_read(spark, table_path):
     meta["files_parts"] = 1
     with open(cp, "w") as fh:
         json.dump(meta, fh)
-    t2 = TxLogTable.open(table_path)
-    assert t2._resolve(10) == files
-    assert len(t2._resolve()) == 12
+    with pytest.raises(LogFormatError, match="JSON checkpoint parts"):
+        TxLogTable.open(table_path)
 
     # legacy INLINE single-JSON checkpoints (pre-r10) too
     meta["files_parts"] = None
@@ -90,8 +94,8 @@ def test_legacy_json_parts_still_read(spark, table_path):
     with open(cp, "w") as fh:
         json.dump(meta, fh)
     os.remove(t._part_path(10, 0))
-    t3 = TxLogTable.open(table_path)
-    assert t3._resolve(10) == files
+    with pytest.raises(LogFormatError, match="inline 'files'"):
+        TxLogTable.open(table_path)
 
 
 def test_column_selective_reads_counted(spark, table_path, monkeypatch):

@@ -585,19 +585,15 @@ def test_protocol_table_features(spark, table_path):
     assert t.read(spark, v - 1).count() == 3
 
 
-def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
-    """r9: a checkpoint written WITHOUT a state key (a downlevel
-    writer's format) must not force the replay into a full walk from 0
-    — after log retention that walk would silently skip expired commits
-    and reconstruct WRONG state (lost constraints, a pre-rename
-    schema). Seeding falls back to an OLDER checkpoint carrying the key
-    (the retention boundary checkpoint always does); with NO carrying
-    checkpoint, a walk that needs expired commits raises the pinned
-    VersionExpiredError instead of dropping their actions. Also pins
-    the constraint-dependency rule: renaming/dropping a column an
-    active CHECK references is refused."""
-    from service_level_reporting_spark.sources.txlog import (
-        VersionExpiredError)
+def test_downlevel_checkpoint_raises_after_retention(spark, table_path):
+    """After log retention every replay seeds from a checkpoint, so the
+    state it carries must be complete: a checkpoint written WITHOUT a
+    state key (a downlevel writer's format) raises LogFormatError naming
+    the missing keys — never a silent walk that skips expired commits
+    and reconstructs WRONG state (lost constraints, a pre-rename
+    schema). Also pins the constraint-dependency rule: renaming/dropping
+    a column an active CHECK references is refused."""
+    from service_level_reporting_spark.sources.txlog import LogFormatError
 
     t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
     t.append(_frame(spark, [("a", 1, "x")]))                     # v0
@@ -619,19 +615,7 @@ def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
     eb = t.earliest_version()
     assert eb > 5                 # the mapping/constraint commits expired
 
-    # strip the r7-r9 keys from the NEWEST checkpoint (downlevel format)
-    cks = sorted(f for f in os.listdir(t.log_dir)
-                 if f.endswith(".checkpoint.json"))
-    with open(os.path.join(t.log_dir, cks[-1])) as fh:
-        payload = json.load(fh)
-    for key in ("schema", "schema_evolved", "constraints", "txns",
-                "protocol", "columnMapping", "config"):
-        payload.pop(key, None)
-    with open(os.path.join(t.log_dir, cks[-1]), "w") as fh:
-        json.dump(payload, fh)
-
-    # every replay must seed from the OLDER (boundary) checkpoint —
-    # correct state, not a silent walk-from-0 reconstruction
+    # the retained checkpoints carry the expired commits' state
     t2 = TxLogTable.open(table_path)
     sch, _ = t2.table_schema_info()
     assert "value" in {f.name for f in sch.fields} \
@@ -641,9 +625,11 @@ def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
     assert t2.table_protocol()["minReaderVersion"] == 3
     assert t2.read(spark).count() == 21
 
-    # strip ALL checkpoints: the walk would need expired commits —
-    # the pinned error, never silently-wrong state
-    for ck in cks:
+    # strip the r7-r9 keys from the NEWEST checkpoint (downlevel format)
+    cks = sorted(f for f in os.listdir(t.log_dir)
+                 if f.endswith(".checkpoint.json"))
+
+    def strip(ck):
         with open(os.path.join(t.log_dir, ck)) as fh:
             payload = json.load(fh)
         for key in ("schema", "schema_evolved", "constraints", "txns",
@@ -651,8 +637,17 @@ def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
             payload.pop(key, None)
         with open(os.path.join(t.log_dir, ck), "w") as fh:
             json.dump(payload, fh)
-    with pytest.raises(VersionExpiredError):
+
+    strip(cks[-1])
+    with pytest.raises(LogFormatError, match=r"missing key\(s\)"):
         TxLogTable.open(table_path)   # __init__'s config replay raises
+
+    # strip ALL checkpoints: the full replay's retention-boundary seed
+    # raises the named error too, never silently-wrong state
+    for ck in cks[:-1]:
+        strip(ck)
+    with pytest.raises(LogFormatError, match="'constraints'"):
+        t.constraints(use_checkpoint=False)
 
 
 def test_mapping_survives_checkpoints_and_log_retention(spark,

@@ -1089,8 +1089,7 @@ def test_checkpoint_sharding_counted_io(spark, table_path, monkeypatch):
     proof (monkeypatched open, like the r8 zero-footer test):
     metadata walkers never open a part file; resolution opens exactly
     the parts; a repeat resolve of the same version opens NOTHING (the
-    per-version snapshot cache); log retention deletes expired parts;
-    legacy inline single-JSON checkpoints still read."""
+    per-version snapshot cache); log retention deletes expired parts."""
     import builtins
 
     def frame(v):

@@ -17,7 +17,8 @@ import pytest
 pytestmark = __import__('pytest').mark.slow
 from pyspark.sql import functions as F
 
-from service_level_reporting_spark.sources.txlog import TxLogTable
+from service_level_reporting_spark.sources.txlog import (
+    LogFormatError, TxLogTable)
 from service_level_reporting_spark.sources.txlog_datasource import (
     TxLogBatchReader, TxLogDataSource)
 from service_level_reporting_spark.sources.sinks import minute_rollup
@@ -603,9 +604,10 @@ def test_null_count_prune_skips_dv_carrying_files(spark, table_path):
 
 
 def _strip_schema_meta(t):
-    """Rewrite the log as a PRE-r8 'legacy' log: drop metaData actions
-    and checkpoint-carried schemas (checkpoints removed wholesale —
-    resolution falls back to the full-log walk)."""
+    """Rewrite the log as a PRE-r8 'legacy' log — data files with no
+    metaData action: drop metaData actions and checkpoint-carried
+    schemas (checkpoints removed wholesale — resolution falls back to
+    the full-log walk)."""
     import json as _json
 
     for f in sorted(os.listdir(t.log_dir)):
@@ -632,7 +634,7 @@ def test_schema_from_log_o1_footer_reads(spark, table_path, monkeypatch):
     live file; at 10^5-10^6 files that is an O(n_files) storm per query
     analysis). Values and columns stay identical to
     TxLogTable.read(merge_schema=True); a legacy log (metaData stripped)
-    falls back to footer unification and still reads correctly."""
+    raises LogFormatError instead of falling back to footers."""
     import pyarrow.parquet as pq
 
     spark.dataSource.register(TxLogDataSource)
@@ -671,23 +673,24 @@ def test_schema_from_log_o1_footer_reads(spark, table_path, monkeypatch):
     with pytest.raises(Exception, match="mergeSchema"):
         spark.read.format("txlog").load(table_path).collect()
 
-    # legacy log: footer fallback engages (reads > 0) and stays correct
+    # legacy log: no footer fallback — the named error, still with zero
+    # footer reads
     _strip_schema_meta(t)
     calls["n"] = 0
-    pin2 = _pin_snapshot(table_path, {"mergeSchema": "true"})
-    assert calls["n"] > 0                    # one open per live file
-    assert set(pin2["schema"].names) == {"k", "v", "region"}
-    df2 = (spark.read.format("txlog").option("mergeSchema", "true")
-           .load(table_path))
-    assert _multiset(df2) == _multiset(want)
+    with pytest.raises(LogFormatError, match="no metaData schema action"):
+        _pin_snapshot(table_path, {"mergeSchema": "true"})
+    assert calls["n"] == 0
+    with pytest.raises(Exception, match="no metaData schema action"):
+        (spark.read.format("txlog").option("mergeSchema", "true")
+         .load(table_path).collect())
 
 
 def test_non_additive_evolution_pinned_errors(spark, table_path):
     """r8 (VERDICT item 6): the pinned non-additive contract — a TYPE
     change raises the same actionable error through the table API (at
-    write, nothing staged) and the data source (reading a legacy log
-    whose footers conflict); omitted recorded columns stay allowed
-    (NULL-fill, Delta-with-autoMerge parity)."""
+    write, nothing staged); omitted recorded columns stay allowed
+    (NULL-fill, Delta-with-autoMerge parity). A legacy log (no metaData
+    action) raises LogFormatError through both APIs."""
     from service_level_reporting_spark.sources.txlog import (
         SchemaEvolutionError)
 
@@ -712,13 +715,15 @@ def test_non_additive_evolution_pinned_errors(spark, table_path):
            for r in t.read(spark, merge_schema=True).collect()}
     assert got == {"a": None, "c": "eu", "d": None}
 
-    # legacy log with genuinely conflicting file types: the data source
-    # raises the SAME actionable message (footer unify path)
+    # legacy log: neither API guesses a schema from footers — a write
+    # refuses before staging, the data source refuses at analysis
     _strip_schema_meta(t)
-    t.append(spark.createDataFrame([("e", "notanum")],
-                                   "k string, x string").coalesce(1))
-    _strip_schema_meta(t)
-    with pytest.raises(Exception, match="Non-additive"):
+    n_before = t.latest_version()
+    with pytest.raises(LogFormatError, match="no metaData schema action"):
+        t.append(spark.createDataFrame([("e", "notanum")],
+                                       "k string, x string").coalesce(1))
+    assert t.latest_version() == n_before    # nothing committed
+    with pytest.raises(Exception, match="no metaData schema action"):
         (spark.read.format("txlog").option("mergeSchema", "true")
          .load(table_path).collect())
 
